@@ -181,9 +181,9 @@ def _warmup(spark, sf_dir: str) -> None:
     # near-dup headline queries read THIS table, so their numbers
     # measure the PPJoin/LSH work, not corpus re-shingling — the
     # production shape where shingling happens at corpus load time.
-    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
 
-    ensure_dedup_ingest(spark, sf_dir)
+    SHINGLES.ensure(spark, sf_dir)
 
 
 def cold_one(name: str, sf_dir: str) -> None:

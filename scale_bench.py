@@ -1150,7 +1150,7 @@ def hashed_gram_measurement() -> None:
 
 
 def winnow_ingest_timing() -> None:
-    """At-ingest winnow table evidence (VERDICT r7 item 2): build wall
+    """At-ingest winnow table evidence: build wall
     at sf1, fresh-session re-attach wall (must be milliseconds — the
     CREATE TABLE ... LOCATION path, not a rebuild), append wall for a
     10%-of-corpus epoch, and the from-storage query wall vs inline.
@@ -1158,9 +1158,7 @@ def winnow_ingest_timing() -> None:
     from pyspark.sql import functions as F
 
     from simplex_mapreduce_spark.operators.text import (
-        _winnow_table_name,
-        append_to_winnow_table,
-        ensure_winnow_ingest,
+        WINNOW_FPS,
         winnow_pairs_from_table,
         winnowing_overlap,
     )
@@ -1169,10 +1167,10 @@ def winnow_ingest_timing() -> None:
     spark = get_spark("winnow-ingest-a")
     spark.sparkContext.setLogLevel("ERROR")
     ensure_scaled(spark, SRC, SF1_DIR, factor=10)
-    table = _winnow_table_name(SF1_DIR)
+    table = WINNOW_FPS.name(SF1_DIR)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     t0 = time.perf_counter()
-    ensure_winnow_ingest(spark, SF1_DIR)
+    WINNOW_FPS.ensure(spark, SF1_DIR)
     rec["build_wall"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
     winnow_pairs_from_table(spark, table).write.mode("overwrite").format(
@@ -1191,26 +1189,18 @@ def winnow_ingest_timing() -> None:
         .withColumn("doc_id", F.col("doc_id") + F.lit(10_000_000))
     )
     t0 = time.perf_counter()
-    append_to_winnow_table(spark, delta, table)
+    WINNOW_FPS.append(spark, delta, table)
     rec["append_wall_10pct"] = round(time.perf_counter() - t0, 3)
     spark.stop()
 
     # fresh session: the table must re-attach from the warehouse in
     # milliseconds, not rebuild (the append poisoned the fingerprint,
-    # so ensure_winnow_ingest would rebuild — measure the ATTACH path
-    # itself: register_external_bucketed + the from-storage query)
-    from simplex_mapreduce_spark.operators.text import WINNOW_TABLE_BUCKETS
-    from simplex_mapreduce_spark.sources.bucketing import (
-        register_external_bucketed,
-    )
-
+    # so WINNOW_FPS.ensure would rebuild — measure the ATTACH path
+    # itself: WINNOW_FPS.attach + the from-storage query)
     spark = get_spark("winnow-ingest-b")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    assert register_external_bucketed(
-        spark, table, "doc_id", n_buckets=WINNOW_TABLE_BUCKETS,
-        sort_key="doc_id",
-    )
+    assert WINNOW_FPS.attach(spark, table)
     rec["fresh_session_attach_wall"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
     n = winnow_pairs_from_table(spark, table).count()
@@ -1264,7 +1254,7 @@ def sf100_pairs_probe() -> None:
     ``sf100_pairs`` into SCALING.json."""
     from pyspark.sql import functions as F
 
-    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
     from simplex_mapreduce_spark.sources.scalegen import ensure_unique
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
@@ -1294,7 +1284,7 @@ def sf100_pairs_probe() -> None:
         )
         spark.sparkContext.setLogLevel("ERROR")
         t0 = time.perf_counter()
-        ensure_dedup_ingest(spark, sf_dir)
+        SHINGLES.ensure(spark, sf_dir)
         crec.setdefault(
             "ingest_wall", round(time.perf_counter() - t0, 3)
         )
@@ -1310,7 +1300,7 @@ def sf100_pairs_probe() -> None:
                 # timed window — queries that localCheckpoint (the
                 # winnow family) materialize upstream stages at
                 # construction under AQE; the at-ingest table build is
-                # still excluded (ensure_dedup_ingest ran above).
+                # still excluded (SHINGLES.ensure ran above).
                 t0 = time.perf_counter()
                 df = (registry.QUERIES.get(name) or extra[name])(
                     spark, sf_dir
@@ -1561,7 +1551,7 @@ def bpe_batched_measurement() -> None:
 
 
 def maintenance_timing() -> None:
-    """VERDICT r9 item 2 SCALING evidence: refresh-vs-rebuild walls at
+    """SCALING evidence: refresh-vs-rebuild walls at
     sf1 for the three maintained stored artifacts — shingle table,
     winnow fingerprint table, IVF index.  Each artifact: build from
     'yesterday' (the ingest cost a deployment pays once), apply the
@@ -1570,30 +1560,18 @@ def maintenance_timing() -> None:
     refresh/rebuild ratio plus the compaction stats.  Writes
     ``maintenance_refresh`` into SCALING.json.  Usage:
     ``python scale_bench.py --maintenance``."""
-    import re as _re
-
-    from pyspark.sql import functions as F
-
     from simplex_mapreduce_spark.operators.dedup import (
+        SHINGLES,
         _maintained_corpus,
-        apply_corpus_diff_to_shingle_table,
-        build_shingle_table_from_docs,
     )
     from simplex_mapreduce_spark.operators.similarity import (
-        IVF_CELLS,
-        _centroid_cells,
+        IVF_INDEX,
         _embeddings,
         _maintained_vectors,
-        _nearest_cell_expr,
         _vector_diff,
-        apply_vector_diff_to_ivf_index,
     )
-    from simplex_mapreduce_spark.operators.text import (
-        apply_corpus_diff_to_winnow_table,
-        build_winnow_table_from_docs,
-    )
+    from simplex_mapreduce_spark.operators.text import WINNOW_FPS
     from simplex_mapreduce_spark.operators.versioning import corpus_diff
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
     from simplex_mapreduce_spark.sources.tables import load_table
 
     spark = get_spark("maintenance-timing")
@@ -1611,33 +1589,21 @@ def maintenance_timing() -> None:
         return round(time.perf_counter() - t0, 2), r
 
     try:
-        for label, build, maintain in (
-            (
-                "shingle",
-                lambda t: build_shingle_table_from_docs(spark, docs, t),
-                lambda t: apply_corpus_diff_to_shingle_table(
-                    spark, diff, v2, t
-                ),
-            ),
-            (
-                "winnow",
-                lambda t: build_winnow_table_from_docs(spark, docs, t),
-                lambda t: apply_corpus_diff_to_winnow_table(
-                    spark, diff, v2, t
-                ),
-            ),
+        old_v = _embeddings(spark, SF1_DIR)
+        new_v = _maintained_vectors(old_v)
+        vdiff = _vector_diff(old_v, new_v).localCheckpoint(eager=True)
+        for label, spec, old, new, d in (
+            ("shingle", SHINGLES, docs, v2, diff),
+            ("winnow", WINNOW_FPS, docs, v2, diff),
+            ("ivf", IVF_INDEX, old_v, new_v, vdiff),
         ):
             tm, tr = f"maint_probe_{label}", f"maint_probe_{label}_rb"
             scratch += [tm, tr]
-            for t in (tm, tr):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-            build_wall, _ = timed(lambda: build(tm))
-            maint_wall, stats = timed(lambda: maintain(tm))
-            rebuild_wall, _ = timed(
-                lambda: build_shingle_table_from_docs(spark, v2, tr)
-                if label == "shingle"
-                else build_winnow_table_from_docs(spark, v2, tr)
+            build_wall, _ = timed(lambda: spec.build(spark, old, tm))
+            maint_wall, stats = timed(
+                lambda: spec.apply_diff(spark, d, new, tm, old=old)
             )
+            rebuild_wall, _ = timed(lambda: spec.build(spark, new, tr))
             rec[label] = {
                 "build_wall": build_wall,
                 "refresh_wall": maint_wall,
@@ -1648,40 +1614,6 @@ def maintenance_timing() -> None:
                 "stats": stats,
             }
             print(f"  {label}: {json.dumps(rec[label])}", flush=True)
-
-        old_v = _embeddings(spark, SF1_DIR)
-        new_v = _maintained_vectors(old_v)
-        vdiff = _vector_diff(old_v, new_v).localCheckpoint(eager=True)
-        tm, tr = "maint_probe_ivf", "maint_probe_ivf_rb"
-        scratch += [tm, tr]
-
-        def build_ivf(v, t):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            assigned = v.crossJoin(
-                F.broadcast(_centroid_cells(v))
-            ).select("vec_id", "e", _nearest_cell_expr().alias("cell_id"))
-            write_bucketed(
-                assigned, t, "cell_id", n_buckets=IVF_CELLS,
-                sort_key="vec_id",
-            )
-
-        build_wall, _ = timed(lambda: build_ivf(old_v, tm))
-        maint_wall, stats = timed(
-            lambda: apply_vector_diff_to_ivf_index(
-                spark, vdiff, old_v, new_v, tm
-            )
-        )
-        rebuild_wall, _ = timed(lambda: build_ivf(new_v, tr))
-        rec["ivf"] = {
-            "build_wall": build_wall,
-            "refresh_wall": maint_wall,
-            "rebuild_wall": rebuild_wall,
-            "refresh_over_rebuild": round(
-                maint_wall / max(rebuild_wall, 1e-9), 3
-            ),
-            "stats": stats,
-        }
-        print(f"  ivf: {json.dumps(rec['ivf'])}", flush=True)
     finally:
         for t in scratch:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -1793,14 +1725,11 @@ def cold_attach_measurement() -> None:
     import pyarrow.parquet as pq
 
     from simplex_mapreduce_spark.operators.dedup import (
-        SHINGLE_TABLE_BUCKETS,
+        SHINGLES,
         jaccard_pairs_from_table,
         minhash_pairs_from_table,
     )
     from simplex_mapreduce_spark.plans.explain import scan_read_schema
-    from simplex_mapreduce_spark.sources.bucketing import (
-        register_external_bucketed,
-    )
 
     table = next(
         (a for a in sys.argv[2:] if not a.startswith("-")),
@@ -1854,9 +1783,7 @@ def cold_attach_measurement() -> None:
             t0 = time.perf_counter()
             # a fresh session's in-memory catalog has no table entry —
             # re-attachment is part of the cold-attach cost being read
-            register_external_bucketed(
-                spark, table, "doc_id", SHINGLE_TABLE_BUCKETS, "doc_id"
-            )
+            SHINGLES.attach(spark, table)
             df = fn(spark)
             n = df.count()
             wall = round(time.perf_counter() - t0, 1)
@@ -2017,10 +1944,9 @@ def u1000_sidecar_measurement() -> None:
     from pyspark.sql import functions as F
 
     from simplex_mapreduce_spark.operators.dedup import (
-        _shingle_table_name,
-        _stored_groups,
         MIRROR_GROUP_CAP,
-        ensure_dedup_ingest,
+        SHINGLES,
+        _stored_groups,
     )
 
     def drop_page_cache() -> bool:
@@ -2038,9 +1964,8 @@ def u1000_sidecar_measurement() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    ensure_dedup_ingest(spark, U1000_DIR)
+    table = SHINGLES.ensure(spark, U1000_DIR)
     attach_wall = round(time.perf_counter() - t0, 3)
-    table = _shingle_table_name(U1000_DIR)
     sidecar_ok = {
         kind: _stored_groups(spark, table, kind, MIRROR_GROUP_CAP)
         is not None
@@ -2107,8 +2032,8 @@ def ppjoin_spill_measurement() -> None:
 
     from simplex_mapreduce_spark.operators import dedup
     from simplex_mapreduce_spark.operators.dedup import (
+        SHINGLES,
         _prefix_candidates_posting,
-        ensure_dedup_ingest,
     )
 
     def drop_page_cache() -> bool:
@@ -2133,7 +2058,7 @@ def ppjoin_spill_measurement() -> None:
         )
         spark.sparkContext.setLogLevel("ERROR")
         t0 = time.perf_counter()
-        ensure_dedup_ingest(spark, U1000_DIR)
+        SHINGLES.ensure(spark, U1000_DIR)
         attach = round(time.perf_counter() - t0, 3)
         orig = dedup.prefix_candidates
         dedup.prefix_candidates = candidates_fn
@@ -2220,8 +2145,8 @@ def ppjoin_stage_diagnosis() -> None:
 
     from simplex_mapreduce_spark.operators import dedup
     from simplex_mapreduce_spark.operators.dedup import (
+        SHINGLES,
         _prefix_candidates_posting,
-        ensure_dedup_ingest,
     )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
@@ -2231,7 +2156,7 @@ def ppjoin_stage_diagnosis() -> None:
         extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ensure_dedup_ingest(spark, U1000_DIR)
+    SHINGLES.ensure(spark, U1000_DIR)
     if "--posting" in sys.argv:
         dedup.prefix_candidates = _prefix_candidates_posting
         print("formulation: posting_alternative", flush=True)
@@ -2343,7 +2268,10 @@ def ingest_phase_diagnosis() -> None:
     from pyspark.sql import functions as F
 
     from simplex_mapreduce_spark.operators import dedup
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
+    from simplex_mapreduce_spark.sources.bucketing import (
+        sidecar_path,
+        write_bucketed,
+    )
     from simplex_mapreduce_spark.sources.tables import load_table
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
@@ -2380,21 +2308,17 @@ def ingest_phase_diagnosis() -> None:
           noop(sets.select("doc_id", F.md5(F.to_json("sh_ids")))))
     clock("proj_minhash(8x md5 transforms)",
           noop(sets.select("doc_id", *dedup.minhash_cols())))
-    full = sets.select(
-        "doc_id", "shingles", "sh_ids", "ordered_ids",
-        F.md5(F.to_json("sh_ids")).alias("set_digest"),
-        *dedup.minhash_cols(),
-    )
+    full = dedup.shingle_table_rows(sets)
     clock("proj_full(write input)", noop(full))
     table = "shingle_sets_probe_u100"
+    spec = dedup.SHINGLES
     clock("write_bucketed(16)", lambda: write_bucketed(
-        full, table, "doc_id",
-        n_buckets=dedup.SHINGLE_TABLE_BUCKETS, sort_key="doc_id",
+        full, table, spec.bucket_col, spec.n_buckets, spec.sort_key,
     ))
     clock("hotdf_sidecar_write", lambda: dedup.hot_df_rows(base)
-          .write.mode("overwrite").parquet(dedup._hotdf_path(spark, table)))
+          .write.mode("overwrite").parquet(sidecar_path(spark, table, "hotdf")))
     clock("group_sidecars_refresh",
-          lambda: dedup.refresh_group_sidecars(spark, table))
+          lambda: spec.refresh_sidecars(spark, table))
     base.unpersist()
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.stop()
@@ -2691,7 +2615,7 @@ def minhash_heap_profile() -> None:
     scale_bench.py --minhash-heap``."""
     from pyspark.sql import functions as F
 
-    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
     heap = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
@@ -2712,7 +2636,7 @@ def minhash_heap_profile() -> None:
         )
 
     t0 = time.perf_counter()
-    ensure_dedup_ingest(spark, U1000_DIR)
+    SHINGLES.ensure(spark, U1000_DIR)
     attach = round(time.perf_counter() - t0, 3)
     rec: dict = {"heap": heap, "attach_wall": attach}
     for run in ("warm1", "warm2"):
@@ -2786,7 +2710,7 @@ def cc_u1000_measurement() -> None:
     from simplex_mapreduce_spark.operators.clusters import (
         connected_components_star,
     )
-    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
     spark = get_spark(
@@ -2796,7 +2720,7 @@ def cc_u1000_measurement() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    ensure_dedup_ingest(spark, U1000_DIR)
+    SHINGLES.ensure(spark, U1000_DIR)
     attach = round(time.perf_counter() - t0, 3)
     pairs = registry.QUERIES["ngram_jaccard_neardup"](
         spark, U1000_DIR
@@ -3335,7 +3259,7 @@ def sf30_spot_check() -> None:
 
 
 def measure_point(spark, out: dict, label: str, sf_dir: str, names) -> None:
-    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
     from simplex_mapreduce_spark.sources.tables import TABLES
 
     # warm the scan path outside any timed region
@@ -3343,7 +3267,7 @@ def measure_point(spark, out: dict, label: str, sf_dir: str, names) -> None:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
     # at-ingest shingling pass (idempotent; see bench.py note)
     t0 = time.perf_counter()
-    ensure_dedup_ingest(spark, sf_dir)
+    SHINGLES.ensure(spark, sf_dir)
     out.setdefault("ingest_wall", {})[label] = round(time.perf_counter() - t0, 3)
     for name in names:
         # settle the JVM between queries: a cold wall measured while the
@@ -3371,6 +3295,9 @@ def measure_point(spark, out: dict, label: str, sf_dir: str, names) -> None:
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv):
+        print(__doc__)
+        return
     registry.load_all()
     if "--spill" in sys.argv:
         spill_drill()

@@ -12,9 +12,12 @@ higher-order functions (zip_with + aggregate) — no Python UDF.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from simplex_mapreduce_spark.registry import register
+from simplex_mapreduce_spark.sources.bucketing import DerivedTable, read_bucketed
 from simplex_mapreduce_spark.sources.tables import load_table
 
 QUERY_VEC_ID = 0
@@ -60,10 +63,16 @@ def _nearest_cell_expr():
     )
 
 
+def _vectors(v):
+    """(vec_id, e array<double>) from such a frame or from a raw
+    ``embeddings`` table."""
+    if "e" in v.columns:
+        return v.select("vec_id", "e")
+    return v.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+
+
 def _embeddings(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    return _vectors(load_table(spark, sf_dir, "embeddings"))
 
 
 def _centroid_cells(v):
@@ -207,94 +216,46 @@ def ann_ivf_topk(spark, sf_dir):
     )
 
 
-def _ivf_table_name(sf_dir: str) -> str:
-    """Index table name tagged with the data directory so an index built
-    at one scale factor is never silently reused against another."""
-    import re
-
-    tag = re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return f"ivf_index_{tag}"
-
-
-def build_ivf_index(spark, sf_dir, table: str | None = None) -> str:
-    """Materialize the IVF index: every vector's nearest-centroid
-    assignment, stored as a managed table BUCKETED BY cell_id — the real
-    ANN deployment shape (the inline ann_ivf_topk recomputes this
-    assignment per query; a deployment computes it once at ingest and
-    every query prunes to its probed buckets).
-
-    Bucketing by cell_id means a probe reads only nprobe/IVF_CELLS of
-    the stored files; at 100 TB the assignment job is the one full
-    corpus pass, amortized over every subsequent query.  Returns the
-    table name."""
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
-
-    table = table or _ivf_table_name(sf_dir)
-    v = _embeddings(spark, sf_dir)
-    assigned = (
-        v.crossJoin(F.broadcast(_centroid_cells(v)))
-        .select("vec_id", "e", _nearest_cell_expr().alias("cell_id"))
-    )
-    write_bucketed(assigned, table, "cell_id", n_buckets=IVF_CELLS, sort_key="vec_id")
-    return table
-
-
-def append_to_ivf_index(spark, new_vecs, table: str) -> None:
-    """Incremental corpus growth for the ANN index: assign ONLY the new
-    vectors and bucket-append them — the daily-ingest path where
-    re-running the full assignment job per increment would dominate at
-    scale (the round-6 shingle-table pattern, VERDICT r6 item 4).
-
-    Correctness hinges on assigning the delta against the ORIGINAL
-    centroids, read back from the stored index itself (the centroid
-    rows live in the index as vec_ids 0..{IVF_CELLS-1}): the probe
-    prunes by the stored cell_id, so every vector — old or new — must
-    be placed under the same centroid set or a query could probe the
-    wrong cells.  Because the full rebuild derives its centroids from
-    those same vec_ids, append-then-query is IDENTICAL to
-    rebuild-then-query (pinned full-vs-incremental in
-    tests/test_oracle_queries.py).  The append lands through the same
-    bucketBy writer, so cell-id file pruning survives.
-
-    Appending makes the table a superset of its source directory, so
-    both the durable marker and the session catalog fingerprint are
-    poisoned: an ensure_derived_table-managed name rebuilds from its
-    directory on next use instead of silently serving extra vectors.
-
-    ``new_vecs``: (vec_id, e array<double>) rows, vec_ids disjoint from
-    the stored ones."""
-    from simplex_mapreduce_spark.sources.bucketing import (
-        read_bucketed,
-        write_table_marker,
-    )
-
-    idx = read_bucketed(spark, table)
-    cents = idx.filter(F.col("vec_id") < IVF_CELLS).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col("vec_id").alias("cell_id"), F.col("e").alias("ce"))
+@contextmanager
+def _ivf_rows(spark, vecs, table):
+    """Every vector's nearest-centroid assignment (vec_id, e, cell_id).
+    The centroids are the vectors vec_id 0..IVF_CELLS-1 (the
+    deterministic 'training'); rows placed against a stored index use
+    the centroid rows stored in it, so append-then-query equals
+    rebuild-then-query (pinned in tests/test_oracle_queries.py).  Those
+    vec_ids pin the index geometry, so adding or removing one is
+    refused: it needs a rebuild."""
+    v = _vectors(vecs)
+    if table is None:
+        cells = _centroid_cells(v)
+    else:
+        n_centroid = v.filter(F.col("vec_id") < IVF_CELLS).count()
+        if n_centroid:
+            raise ValueError(
+                f"{n_centroid} vec_id(s) below {IVF_CELLS} are centroid "
+                "sources: adding or removing them changes the index "
+                "geometry — rebuild the index instead"
             )
-        ).alias("cells")
+        cells = _centroid_cells(read_bucketed(spark, table))
+    yield v.crossJoin(F.broadcast(cells)).select(
+        "vec_id", "e", _nearest_cell_expr().alias("cell_id")
     )
-    assigned = (
-        new_vecs.select("vec_id", "e")
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "e", _nearest_cell_expr().alias("cell_id"))
-    )
-    (
-        assigned.repartition(IVF_CELLS, F.col("cell_id"))
-        .write.mode("append")
-        .bucketBy(IVF_CELLS, "cell_id")
-        .sortBy("vec_id")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    write_table_marker(spark, table, "_INGEST_FINGERPRINT", "incremental-append")
-    if spark.catalog.tableExists(table):
-        spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES "
-            "('corpus_fingerprint' = 'incremental-append')"
-        )
+
+
+# The stored index: the assignment the inline ann_ivf_topk recomputes
+# per query, paid once at ingest.  Bucketed by cell_id, so a probe reads
+# only nprobe/IVF_CELLS of the files; tombstones arrive by vec_id, and
+# compaction re-derives their cells against the stored centroids.
+IVF_INDEX = DerivedTable(
+    prefix="ivf_index",
+    source="embeddings",
+    epoch="ivf_v1",
+    bucket_col="cell_id",
+    n_buckets=IVF_CELLS,
+    sort_key="vec_id",
+    removal_key="vec_id",
+    rows=_ivf_rows,
+)
 
 
 # The persisted plan returns the same ranked top-k as the inline plan
@@ -305,66 +266,26 @@ ANN_IVF_PERSISTED_SQL = ANN_IVF_TOPK_SQL.replace(
 )
 
 
+# result equivalence vs the inline plan is pinned in
+# tests/test_oracle_queries.py
 @register(
     "ann_ivf_topk_persisted",
-    oracle=ANN_IVF_PERSISTED_SQL,  # oracled round 7 (deprioritized:
-    # local strict gate; the plan additionally pinned equal to the
-    # driver-hashed inline plan in tests/test_oracle_queries.py)
+    oracle=ANN_IVF_PERSISTED_SQL,
     deprioritized=True,
-)  # plan reads a stored index;
-# result equivalence vs the inline plan is pinned in tests/test_oracle_queries.py
+)
 def ann_ivf_topk_persisted(spark, sf_dir):
-    """ann_ivf_topk against the PERSISTED index (built on first use):
-    the query never touches raw embeddings — it reads the bucketed
-    assignment table, collects the nprobe probed cell ids to the driver
-    (index METADATA: nprobe ints, not data), and filters with a
-    literal ``isin`` so the scan statically prunes to the probed
-    buckets.  Exact top-k inside the probed cells, same heap finish as
-    the inline plan."""
-    import os
-
-    from simplex_mapreduce_spark.sources.bucketing import (
-        ensure_derived_table,
-        read_bucketed,
-        source_fingerprint,
-    )
-
-    table = _ivf_table_name(sf_dir)
-    # build-reattach-or-rebuild (round 6): a fresh session re-attaches
-    # the surviving index data instead of re-running the assignment
-    # job, and an in-place regenerated embeddings table (scalegen)
-    # invalidates the index via the source fingerprint
-    ensure_derived_table(
-        spark,
-        table,
-        source_fingerprint(
-            os.path.join(sf_dir, "embeddings.parquet"), "ivf_v1"
-        ),
-        lambda: build_ivf_index(spark, sf_dir, table),
-        "cell_id",
-        n_buckets=IVF_CELLS,
-        sort_key="vec_id",
-    )
-    return ivf_topk_from_table(spark, table)
+    """ann_ivf_topk against the PERSISTED index (built on first use,
+    re-attached in later sessions, rebuilt when the embeddings change):
+    the query never touches raw embeddings."""
+    return ivf_topk_from_table(spark, IVF_INDEX.ensure(spark, sf_dir))
 
 
 def ivf_topk_from_table(spark, table: str):
-    """The probe-and-rank half of the persisted IVF plan, factored out
-    (round 10) so the maintenance gate can run the identical query
-    against a maintained index: collect the nprobe probed cell ids
-    (index METADATA, nprobe ints), literal-isin prune the bucketed
-    scan, exact top-k inside the probed cells."""
-    from simplex_mapreduce_spark.sources.bucketing import read_bucketed
-
+    """The probe-and-rank half of the persisted IVF plan: collect the
+    nprobe probed cell ids (index METADATA, nprobe ints), literal-isin
+    prune the bucketed scan, exact top-k inside the probed cells."""
     idx = read_bucketed(spark, table)
-
-    cents = idx.filter(F.col("vec_id") < IVF_CELLS).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col("vec_id").alias("cell_id"), F.col("e").alias("ce"))
-            )
-        ).alias("cells")
-    )
+    cents = _centroid_cells(idx)
     q = idx.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("qe"))
     probe_expr = F.transform(
         F.slice(
@@ -410,18 +331,6 @@ def ivf_topk_from_table(spark, table: str):
     )
 
 
-# ------------------------------------------------------------------ #
-# IVF index delta maintenance (round 10, VERDICT r9 item 2): the
-# diff->compact->append refresh for the THIRD stored artifact, after
-# the shingle table (round 9) and the winnow table (round 10).  The
-# structural twist unique to this one: the index is bucketed by
-# CELL_ID while takedowns arrive as VEC_IDs — but cell_id is a pure
-# function of (vector, stored centroids), so the affected buckets are
-# computed by re-assigning the tombstoned vectors against the
-# centroids (a broadcast over the delta), never by scanning the index
-# for them.
-# ------------------------------------------------------------------ #
-
 # the evolved-embeddings snapshot: remove one vec_id residue class,
 # perturb another, clone a third under offset ids.  The perturbations
 # are sums/products of POWERS OF TWO (0.25, 0.5, 0.125) so the
@@ -429,7 +338,7 @@ def ivf_topk_from_table(spark, table: str):
 # Spark and DuckDB — no rounding seam on top of the existing cos_sim
 # 4dp round.  Centroid-source vectors (vec_id < IVF_CELLS) are exempt
 # from every class: the index's geometry is pinned to them (see
-# compact_ivf_index_removals).
+# _ivf_rows).
 _VMAINT_REMOVED_MOD, _VMAINT_CHANGED_MOD, _VMAINT_ADDED_MOD = 5, 7, 9
 _VMAINT_ADD_OFFSET = 1_000_000_000
 
@@ -474,94 +383,6 @@ def _vector_diff(old, new):
     )
 
 
-def compact_ivf_index_removals(spark, gone_vecs, table: str) -> dict:
-    """Physically remove index rows for the tombstoned vectors by
-    rewriting only the buckets their CELLS hash to.  ``gone_vecs`` is
-    (vec_id, e) with the OLD vectors — the assignment recompute against
-    the stored centroids reproduces exactly the cell_id each row was
-    stored under (same deterministic argmin), so bucket targeting
-    needs no index scan and no vec_id->cell sidecar.
-
-    Centroid-source rows (vec_id < IVF_CELLS) are REFUSED: every
-    stored cell_id and every probe is derived from them, so removing
-    one invalidates the whole geometry — that takedown is the one case
-    that genuinely forces a rebuild, and silently accepting it would
-    corrupt the index instead.  (If only the centroid's SOURCE
-    document is taken down, the centroid itself is aggregate geometry
-    — a deployment may lawfully keep it; this function just refuses to
-    decide that policy implicitly.)"""
-    from simplex_mapreduce_spark.operators.dedup import (
-        compact_bucketed_removals,
-    )
-    from simplex_mapreduce_spark.sources.bucketing import read_bucketed
-
-    n_centroid_gone = gone_vecs.filter(
-        F.col("vec_id") < IVF_CELLS
-    ).count()
-    if n_centroid_gone:
-        raise ValueError(
-            f"{n_centroid_gone} tombstoned vec_id(s) are centroid "
-            f"sources (< {IVF_CELLS}): removing them changes the index "
-            "geometry — rebuild the index instead"
-        )
-    idx = read_bucketed(spark, table)
-    cents = idx.filter(F.col("vec_id") < IVF_CELLS).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("vec_id").alias("cell_id"), F.col("e").alias("ce")
-                )
-            )
-        ).alias("cells")
-    )
-    gone = (
-        gone_vecs.select("vec_id", "e")
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", _nearest_cell_expr().alias("cell_id"))
-        .persist()
-    )
-    buckets = {
-        int(r["b"])
-        for r in gone.select(
-            F.pmod(F.hash("cell_id"), F.lit(IVF_CELLS)).alias("b")
-        )
-        .distinct()
-        .collect()
-    }
-    stats = compact_bucketed_removals(
-        spark, table, IVF_CELLS, buckets, gone.select("vec_id"),
-        key_col="vec_id", bucket_col="cell_id", sort_key="vec_id",
-    )
-    gone.unpersist()
-    return stats
-
-
-def apply_vector_diff_to_ivf_index(
-    spark, diff, old_vecs, new_vecs, table: str
-) -> dict:
-    """Consume a _vector_diff frame against a stored IVF index:
-    bucket-compact removed+changed rows out (targeted via the OLD
-    vectors), then assign-and-append added+changed rows from the new
-    snapshot (append_to_ivf_index — original-centroid assignment, so
-    append == rebuild placement).  Compact-then-append ordering as for
-    the text artifacts: a changed vector's old row must be gone before
-    its new row lands."""
-    gone_ids = diff.filter(
-        F.col("status").isin("removed", "changed")
-    ).select("vec_id")
-    gone_vecs = old_vecs.join(gone_ids, "vec_id", "left_semi")
-    stats = compact_ivf_index_removals(spark, gone_vecs, table)
-    fresh_ids = diff.filter(
-        F.col("status").isin("added", "changed")
-    ).select("vec_id")
-    fresh = new_vecs.join(fresh_ids, "vec_id", "left_semi")
-    n_fresh = fresh.count()
-    if n_fresh:
-        append_to_ivf_index(spark, fresh, table)
-    stats["vectors_appended"] = int(n_fresh)
-    return stats
-
-
 # the evolved-corpus oracle: ANN_IVF_PERSISTED_SQL with the v CTE
 # replaced by the maintained snapshot (same exemption for centroid
 # rows), computed as a full rebuild — so a driver hash match proves
@@ -588,50 +409,25 @@ _IVF_MAINT_SQL = ANN_IVF_PERSISTED_SQL.replace(
 )
 
 
+# the oracle re-derives assignment and probe over the evolved corpus
+# from scratch, so a match proves index maintenance == rebuild: a stale
+# changed row, a leftover removed row or a mis-bucketed append would
+# perturb the probed top-k (vec_id, cell_id, cos_sim) rows
 @register("ivf_maintenance_topk", oracle=_IVF_MAINT_SQL)
-# round-10 addition (VERDICT r9 item 2), driver-oracled from birth
-# (slot yielded by doc_chunks_sliding): the oracle re-derives
-# assignment and
-# probe over the evolved corpus from scratch, so every driver run
-# proves index maintenance == rebuild — a stale changed row, a
-# leftover removed row, or a mis-bucketed append would perturb the
-# probed top-k (vec_id, cell_id, cos_sim) rows and fail the hash.
 def ivf_maintenance_topk(spark, sf_dir):
-    """End-to-end IVF-index REFRESH pipeline: build the index from
-    'yesterday's embeddings, derive the deterministic 'today' snapshot
-    (one vec_id residue class removed, one perturbed by +0.25, one
-    cloned at x*0.5+0.125 under offset ids; centroid sources exempt),
-    diff the two, apply the diff (cell-targeted bucket compaction +
-    original-centroid assign-and-append), and answer the standard
-    probed top-k query FROM THE MAINTAINED INDEX.
-
-    Scale shape: the diff is one digest-reduced full-outer join over
-    vector digests; compaction rewrites only the buckets the
-    tombstoned vectors' cells hash to; the append assigns only the
-    delta (broadcast centroids).  The build step is per-run
-    scaffolding for the gate (applicationId-keyed scratch table); a
-    deployment builds once at ingest and runs only diff->maintain per
-    refresh (SCALING.json ivf_maintenance)."""
-    import re as _re
-
-    table_tag = _re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    table = f"ivf_maint_{table_tag}_{app}"
+    """End-to-end IVF-index refresh: build the index from 'yesterday's
+    embeddings, derive the deterministic 'today' snapshot (one vec_id
+    residue class removed, one perturbed by +0.25, one cloned at
+    x*0.5+0.125 under offset ids; centroid sources exempt), apply the
+    diff (cell-targeted bucket compaction + original-centroid append),
+    and answer the standard probed top-k query from the maintained
+    index.  The build is per-run scaffolding on a per-application
+    scratch table (cost split in SCALING.json, ivf_maintenance)."""
+    table = IVF_INDEX.scratch_name(spark, sf_dir)
     old = _embeddings(spark, sf_dir)
     new = _maintained_vectors(old)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
-
-    assigned = (
-        old.crossJoin(F.broadcast(_centroid_cells(old)))
-        .select("vec_id", "e", _nearest_cell_expr().alias("cell_id"))
-    )
-    write_bucketed(
-        assigned, table, "cell_id", n_buckets=IVF_CELLS, sort_key="vec_id"
-    )
-    apply_vector_diff_to_ivf_index(
-        spark, _vector_diff(old, new), old, new, table
-    )
+    IVF_INDEX.build(spark, old, table)
+    IVF_INDEX.apply_diff(spark, _vector_diff(old, new), new, table, old=old)
     return ivf_topk_from_table(spark, table)
 
 

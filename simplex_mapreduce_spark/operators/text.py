@@ -9,6 +9,8 @@ built-ins / higher-order functions — no Python in the hot path.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -21,6 +23,7 @@ from simplex_mapreduce_spark.functions.textfn import (
     tokens_col,
 )
 from simplex_mapreduce_spark.registry import register
+from simplex_mapreduce_spark.sources.bucketing import DerivedTable, read_bucketed
 from simplex_mapreduce_spark.sources.tables import load_table, spread_scan
 
 
@@ -1669,30 +1672,14 @@ def _winnow_overlap_pairs(fp, subs, max_df: int | None = None):
 
 
 # ------------------------------------------------------------------ #
-# At-ingest winnowing fingerprint table (round-8, VERDICT r7 item 2):
-# the stored counterpart of the query-local localCheckpoint above —
-# the artifact a 100 TB deployment persists once at corpus load and
-# every overlap/contamination run reads from, mirroring the shingle
-# table (dedup.py build_shingle_table / append_to_shingle_table).
-#
-# One structural difference from the PPJoin shingle table, and it makes
-# incremental growth STRICTLY simpler here: winnowing fingerprints are
-# pure per-document functions — no global frequency order — so an
-# appended epoch needs no persisted auxiliary map to stay consistent
-# with the original build.  Mirror groups (the rep-collapse input) are
-# reconstructed AT QUERY TIME from the stored ``dg`` digest column, so
-# a new epoch's exact mirror of an old document lands in the right
-# group with zero cross-epoch bookkeeping.
+# At-ingest winnowing fingerprint table: the stored counterpart of the
+# query-local localCheckpoint above.  Winnowing fingerprints are pure
+# per-document functions with no global frequency order, so appended
+# rows need no stored state to stay consistent with the build, and
+# maintained rows are byte-identical to rebuilt ones.  Mirror groups
+# reassemble from the stored ``dg`` digest column, so an appended
+# exact mirror of an old document lands in the right group.
 # ------------------------------------------------------------------ #
-
-WINNOW_TABLE_BUCKETS = 16
-
-
-def _winnow_table_name(sf_dir: str) -> str:
-    import re
-
-    tag = re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return f"winnow_fps_{tag}"
 
 
 def winnow_ingest_rows(docs):
@@ -1716,131 +1703,47 @@ def winnow_ingest_rows(docs):
     )
 
 
-def build_winnow_table(spark, sf_dir, table: str | None = None) -> str:
-    """Write the winnowing fingerprints to storage as a doc_id-bucketed
-    managed table — the at-ingest pass, paid once per corpus."""
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
-
-    if table is None:
-        table = _winnow_table_name(sf_dir)
-    rows = winnow_ingest_rows(load_table(spark, sf_dir, "documents"))
-    write_bucketed(
-        rows, table, "doc_id", n_buckets=WINNOW_TABLE_BUCKETS,
-        sort_key="doc_id",
-    )
-    _write_winnow_group_sidecar(spark, table)
-    return table
+@contextmanager
+def _winnow_rows(spark, docs, table):
+    yield winnow_ingest_rows(docs)
 
 
-def _write_winnow_group_sidecar(spark, table: str) -> None:
-    """Persist the mirror-group frame next to the winnow table (the
-    round-10 shingle-table lever applied here too): group membership is
-    corpus-level state, so the per-query window+groupBy over the stored
-    dg column is paid once at ingest; queries read the sidecar and fall
-    back to the inline recompute after a maintenance invalidation."""
-    from simplex_mapreduce_spark.operators.dedup import write_group_sidecar
-    from simplex_mapreduce_spark.sources.bucketing import (
-        bump_table_epoch,
-        read_bucketed,
-        read_table_epoch,
-    )
+def _winnow_sidecars(spark, table, rows=None):
+    from simplex_mapreduce_spark.operators.dedup import write_group_sidecars
 
-    # epoch read BEFORE the table read (round-12 advisory; see
-    # write_group_sidecar's docstring for the interleaving this closes)
-    epoch = read_table_epoch(spark, table) or bump_table_epoch(spark, table)
-    write_group_sidecar(
-        spark, table, "dg",
-        read_bucketed(spark, table).select("doc_id", "dg"),
-        epoch=epoch,
-    )
+    write_group_sidecars(spark, table, dg=F.col("dg"))
 
 
-def ensure_winnow_ingest(spark, sf_dir) -> None:
-    """Idempotent at-ingest winnowing (the ensure_dedup_ingest twin):
-    build unless a table fingerprinted from EXACTLY this corpus exists;
-    a fresh session re-attaches the existing table in milliseconds."""
-    import os
-
-    from simplex_mapreduce_spark.sources.bucketing import (
-        ensure_derived_table,
-        source_fingerprint,
-    )
-
-    table = _winnow_table_name(sf_dir)
-    fp = source_fingerprint(
-        os.path.join(sf_dir, "documents.parquet"), "winnow_v2"
-    )
-    ensure_derived_table(
-        spark,
-        table,
-        fp,
-        lambda: build_winnow_table(spark, sf_dir, table),
-        "doc_id",
-        sort_key="doc_id",
-    )
-
-
-def append_to_winnow_table(spark, docs, table: str) -> None:
-    """Incremental corpus growth for the winnow table: fingerprint ONLY
-    the new documents and append through the same bucketed writer.  No
-    auxiliary state is consulted — per-doc fingerprints are
-    epoch-independent by construction, and cross-epoch mirror groups
-    reassemble at query time from the stored dg column (pinned by the
-    epoch-boundary test in tests/test_text_extra.py).  The table
-    becomes a superset of its source directory, so the ingest
-    fingerprint is poisoned exactly like the shingle table's
-    (append_to_shingle_table): a registered-sf_dir name would rebuild
-    rather than silently serve extra documents."""
-    from simplex_mapreduce_spark.operators.dedup import _drop_group_sidecars
-    from simplex_mapreduce_spark.sources.bucketing import (
-        bump_table_epoch,
-        write_table_marker,
-    )
-
-    # invalidate the group sidecar BEFORE the mutation (VERDICT r10
-    # item 2, same ordering as append_to_shingle_table): a crash
-    # anywhere past this point leaves no stale sidecar, and the epoch
-    # bump poisons any copy the drop missed; rebuild via
-    # _write_winnow_group_sidecar when the maintenance window closes
-    bump_table_epoch(spark, table)
-    _drop_group_sidecars(spark, table)
-
-    rows = winnow_ingest_rows(docs)
-    (
-        rows.repartition(WINNOW_TABLE_BUCKETS, F.col("doc_id"))
-        .write.mode("append")
-        .bucketBy(WINNOW_TABLE_BUCKETS, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    write_table_marker(
-        spark, table, "_INGEST_FINGERPRINT", "incremental-append"
-    )
-    if spark.catalog.tableExists(table):
-        spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES "
-            "('corpus_fingerprint' = 'incremental-append')"
-        )
+WINNOW_FPS = DerivedTable(
+    prefix="winnow_fps",
+    source="documents",
+    epoch="winnow_v3",
+    bucket_col="doc_id",
+    n_buckets=16,
+    sort_key="doc_id",
+    removal_key="doc_id",
+    rows=_winnow_rows,
+    sidecars=_winnow_sidecars,
+)
 
 
 def winnow_pairs_from_table(spark, table: str):
     """The overlap report computed from a STORED winnow table: rebuild
-    the mirror groups from the stored dg column, keep rep rows only,
-    and feed the shared pair generator — no text scan, no HOF
-    fingerprinting, no localCheckpoint (the storage IS the
-    materialization barrier the inline query has to fake)."""
+    the mirror groups from the stored dg column (or read the current
+    group sidecar), keep rep rows only, and feed the shared pair
+    generator — no text scan, no HOF fingerprinting, no localCheckpoint
+    (the storage IS the materialization barrier the inline query has
+    to fake)."""
     from simplex_mapreduce_spark.operators.dedup import (
         MIRROR_GROUP_CAP,
         _capped_groups,
         _group_representatives,
         _stored_groups,
     )
-    from simplex_mapreduce_spark.sources.bucketing import read_bucketed
 
     rows = read_bucketed(spark, table)
     subs = _stored_groups(spark, table, "dg", MIRROR_GROUP_CAP)
-    if subs is None:  # pre-sidecar table / post-maintenance invalidation
+    if subs is None:  # no current sidecar: a mutation dropped it
         subs = _capped_groups(rows.select("doc_id", "dg"), "dg")
     fp = _winnow_values(
         rows.join(_group_representatives(subs), "doc_id", "left_semi").select(
@@ -1850,72 +1753,16 @@ def winnow_pairs_from_table(spark, table: str):
     return _winnow_overlap_pairs(fp, subs)
 
 
-@register("winnowing_overlap_stored", oracle=_winnow_oracle())  # round-8
-# addition, driver-oracled from birth (slot yielded by q7_nation_volume);
-# stored-vs-inline pair equality and the epoch append are pinned in
+# stored-vs-inline pair equality and the append are pinned in
 # tests/test_text_extra.py
+@register("winnowing_overlap_stored", oracle=_winnow_oracle())
 def winnowing_overlap_stored(spark, sf_dir):
     """winnowing_overlap in its PRODUCTION shape: overlap pairs read
-    from the at-ingest fingerprint table (built idempotently on first
-    use, re-attached from the warehouse in later sessions) instead of
+    from the at-ingest fingerprint table (built on first use,
+    re-attached from the warehouse in later sessions) instead of
     re-fingerprinting the corpus per query.  Same oracle as the inline
     query — the two paths must be row-identical."""
-    ensure_winnow_ingest(spark, sf_dir)
-    return winnow_pairs_from_table(spark, _winnow_table_name(sf_dir))
-
-
-def build_winnow_table_from_docs(spark, docs, table: str) -> str:
-    """build_winnow_table for an explicit document frame (the
-    maintenance gate's scaffolding builder, mirroring
-    build_shingle_table_from_docs)."""
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
-
-    rows = winnow_ingest_rows(docs)
-    write_bucketed(
-        rows, table, "doc_id", n_buckets=WINNOW_TABLE_BUCKETS,
-        sort_key="doc_id",
-    )
-    _write_winnow_group_sidecar(spark, table)
-    return table
-
-
-def apply_corpus_diff_to_winnow_table(spark, diff, new_docs, table: str) -> dict:
-    """Consume a corpus_diff frame against a stored winnow table:
-    bucket-compact removed+changed rows out, fingerprint and append
-    added+changed docs — the takedown/re-crawl refresh without a
-    rebuild, extended to the winnow artifact in round 10 (VERDICT r9
-    item 2; the shingle table got it in round 9).
-
-    STRICTLY simpler than the shingle version: winnow fingerprints are
-    pure per-document functions, so there is no heavy-hitter-order
-    sidecar to keep consistent — maintained rows are byte-identical to
-    rebuild rows, not merely pair-equivalent.  (The mirror-group
-    sidecar is dropped by both mutation steps; queries fall back to
-    reassembling groups from the stored dg column.)  Compaction reuses the
-    generic bucket engine (dedup.compact_bucketed_removals via the
-    doc_id wrapper): the winnow table is doc_id-bucketed with the same
-    pmod(hash) layout the engine is pinned against.  Order matters as
-    for shingles: compact first, so a changed doc's old row is gone
-    before its new row lands."""
-    from simplex_mapreduce_spark.operators.dedup import (
-        compact_shingle_table_removals,
-    )
-
-    gone = diff.filter(F.col("status").isin("removed", "changed")).select(
-        "doc_id"
-    )
-    stats = compact_shingle_table_removals(
-        spark, gone, table, n_buckets=WINNOW_TABLE_BUCKETS
-    )
-    fresh_ids = diff.filter(F.col("status").isin("added", "changed")).select(
-        "doc_id"
-    )
-    fresh = new_docs.join(fresh_ids, "doc_id", "left_semi")
-    n_fresh = fresh.count()
-    if n_fresh:
-        append_to_winnow_table(spark, fresh, table)
-    stats["docs_appended"] = int(n_fresh)
-    return stats
+    return winnow_pairs_from_table(spark, WINNOW_FPS.ensure(spark, sf_dir))
 
 
 def _winnow_maint_oracle() -> str:
@@ -1924,44 +1771,26 @@ def _winnow_maint_oracle() -> str:
     return _winnow_oracle(src="v2", pre_cte=MAINT_V2_CTE)
 
 
+# the oracle winnows the evolved corpus directly, so a match proves
+# winnow-table maintenance == rebuild: a leftover removed fingerprint
+# row or a missed changed doc would shift a pair row or an n_shared
 @register("winnow_maintenance_pairs", oracle=_winnow_maint_oracle())
-# round-10 addition (VERDICT r9 item 2), driver-oracled from birth
-# (slot yielded by assemble_sequences): the oracle winnows the evolved
-# corpus
-# directly, so every driver run proves winnow-table maintenance ==
-# rebuild — a leftover removed fingerprint row or a missed changed doc
-# would shift a pair row or an n_shared count and fail the hash.
 def winnow_maintenance_pairs(spark, sf_dir):
-    """End-to-end winnow-table REFRESH pipeline (the
-    shingle_maintenance_pairs twin for the second stored artifact):
-    build the winnow fingerprint table from the 'yesterday' corpus,
-    derive the deterministic 'today' snapshot (one doc_id residue
-    class removed, one edited, one cloned under offset ids — the
-    shared _maintained_corpus), corpus_diff the two, apply the diff
-    (bucket-compact + fingerprint-and-append), and emit the overlap
-    pairs FROM THE MAINTAINED TABLE.
-
-    Scale shape: every step is delta-proportional — the diff is one
-    digest-reduced full-outer join, compaction rewrites only the
-    buckets holding tombstoned doc_ids, the append fingerprints only
-    the delta docs.  The build step is per-run scaffolding for the
-    gate (applicationId-keyed scratch table); a deployment builds once
-    at ingest and runs only diff->maintain per refresh (SCALING.json
+    """End-to-end winnow-table refresh (the shingle_maintenance_pairs
+    twin): build the fingerprint table from the 'yesterday' corpus,
+    apply the diff to the deterministic 'today' snapshot (the shared
+    _maintained_corpus), and emit the overlap pairs from the
+    maintained table.  The build is per-run scaffolding on a
+    per-application scratch table (cost split in SCALING.json,
     winnow_maintenance)."""
-    import re as _re
-
     from simplex_mapreduce_spark.operators.dedup import _maintained_corpus
     from simplex_mapreduce_spark.operators.versioning import corpus_diff
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     v2 = _maintained_corpus(docs)
-    tag = _re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    table = f"winnow_maint_{tag}_{app}"
-    build_winnow_table_from_docs(spark, docs, table)
-    apply_corpus_diff_to_winnow_table(
-        spark, corpus_diff(docs, v2), v2, table
-    )
+    table = WINNOW_FPS.scratch_name(spark, sf_dir)
+    WINNOW_FPS.build(spark, docs, table)
+    WINNOW_FPS.apply_diff(spark, corpus_diff(docs, v2), v2, table)
     return winnow_pairs_from_table(spark, table)
 
 
@@ -3396,83 +3225,50 @@ def vocab_growth(spark, sf_dir):
     )
 
 
-def _bpe_table_name(sf_dir: str) -> str:
-    import re
-
-    tag = re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return f"bpe_rules_{tag}"
-
-
-def build_bpe_rules_table(spark, sf_dir, table: str | None = None) -> str:
-    """Train the BPE merge rules and persist them as a stored table —
-    the tokenizer artifact paid once per corpus.  Tiny (one row per
-    merge rule), but stored through the same bucketed-table machinery
-    as the shingle/winnow/IVF artifacts so it survives session
-    restarts and carries a corpus fingerprint."""
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
-
-    if table is None:
-        table = _bpe_table_name(sf_dir)
-    d = load_table(spark, sf_dir, "documents")
+@contextmanager
+def _bpe_rule_rows(spark, docs, table):
+    """The BPE merge rules trained on ``docs`` (one row per rule)."""
     lex = (
-        d.select(F.explode(tokens_col("text")).alias("w"))
+        docs.select(F.explode(tokens_col("text")).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("w", "").alias("seq"), "freq")
         .localCheckpoint(eager=False)
     )
-    rules_df = spark.createDataFrame(
+    yield spark.createDataFrame(
         _learn_bpe_merges(lex),
         "rank int, left_sym string, right_sym string, "
         "merged string, pair_count long",
     )
-    write_bucketed(rules_df, table, "rank", n_buckets=1, sort_key="rank")
-    return table
 
 
-def ensure_bpe_rules(spark, sf_dir) -> str:
-    """Idempotent at-ingest tokenizer training (the ensure_dedup_ingest
-    twin for the BPE artifact): train unless a rules table
-    fingerprinted from EXACTLY this corpus exists; a fresh session
-    re-attaches in milliseconds and pays zero training cost."""
-    import os
-
-    from simplex_mapreduce_spark.sources.bucketing import (
-        ensure_derived_table,
-        source_fingerprint,
-    )
-
-    table = _bpe_table_name(sf_dir)
-    fp = source_fingerprint(
-        os.path.join(sf_dir, "documents.parquet"), "bpe_v1"
-    )
-    ensure_derived_table(
-        spark,
-        table,
-        fp,
-        lambda: build_bpe_rules_table(spark, sf_dir, table),
-        "rank",
-        n_buckets=1,
-        sort_key="rank",
-    )
-    return table
+# the tokenizer artifact: tiny, but stored through the same lifecycle as
+# the other derived tables so it survives session restarts and carries
+# a corpus fingerprint
+BPE_RULES = DerivedTable(
+    prefix="bpe_rules",
+    source="documents",
+    epoch="bpe_v1",
+    bucket_col="rank",
+    n_buckets=1,
+    sort_key="rank",
+    removal_key="rank",
+    rows=_bpe_rule_rows,
+)
 
 
-@register("bpe_encode_stored", oracle=_bpe_encode_oracle())  # round-8
-# addition, driver-oracled from birth (slot yielded by q8_market_share);
 # stored-vs-inline equality pinned in tests/test_text_extra.py
+@register("bpe_encode_stored", oracle=_bpe_encode_oracle())
 def bpe_encode_stored(spark, sf_dir):
     """bpe_encode reading the merge rules from the STORED tokenizer
     artifact instead of re-training — the production encode path: a
-    100 TB deployment trains once at corpus ingest (ensure_bpe_rules,
-    fingerprint-guarded like the shingle/winnow/IVF artifacts) and
-    every downstream encode job collects the N-row rule table (driver
-    state, the kmeans-centroid recipe) and applies the folds.  Same
-    DuckDB oracle as bpe_encode: the stored path must reproduce the
-    inline path's output exactly, which also makes every driver-gate
-    run a stored-vs-inline equivalence check for free."""
-    table = ensure_bpe_rules(spark, sf_dir)
+    deployment trains once at corpus ingest and every downstream
+    encode job collects the N-row rule table (driver state, the
+    kmeans-centroid recipe) and applies the folds.  Same DuckDB oracle
+    as bpe_encode: the stored path must reproduce the inline path's
+    output exactly."""
+    table = BPE_RULES.ensure(spark, sf_dir)
     rules = [
         (r["rank"], r["left_sym"], r["right_sym"], r["merged"],
          r["pair_count"])

@@ -1,7 +1,7 @@
 """Corpus snapshot versioning: the change report between two corpus
 versions — which documents were added, removed, changed, or carried
 unchanged.  The decision input for every incremental pipeline stage in
-this repo (append_to_shingle_table, append_to_ivf_index,
+this repo (the stored-table ``apply_diff`` lifecycle in sources/bucketing.py,
 merge_dedup_state all consume "the delta"; this operator is how a
 deployment DERIVES the delta when the upstream feed doesn't label it).
 

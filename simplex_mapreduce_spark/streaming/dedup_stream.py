@@ -207,20 +207,18 @@ def stream_ingest_to_shingle_table(
     shingle table (the near-dup index) fresh: the daily-crawl loop as
     one continuous pipeline instead of batch reruns.  Stage/apply
     mechanics and crash semantics: :func:`_staged_stream_apply`; the
-    apply step is ONE ``append_to_shingle_table`` delta — shingled
-    under the original build's heavy-hitter map, bucket-appended,
-    pair-set equality vs a from-scratch build pinned in
+    apply step is ONE ``SHINGLES.append`` delta — shingled under the
+    original build's heavy-hitter map, bucket-appended, pair-set
+    equality vs a from-scratch build pinned in
     tests/test_dedup_synthetic.py and the crash drill in
     tests/test_streaming.py."""
-    from simplex_mapreduce_spark.operators.dedup import (
-        append_to_shingle_table,
-    )
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
 
     return _staged_stream_apply(
         spark,
         stream_df,
         work_dir,
-        lambda delta: append_to_shingle_table(spark, delta, table),
+        lambda delta: SHINGLES.append(spark, delta, table),
         crash_at_batch,
     )
 
@@ -232,22 +230,20 @@ def stream_ingest_to_winnow_table(
     work_dir: str,
     crash_at_batch: int | None = None,
 ) -> int:
-    """Streaming ingest for the WINNOW fingerprint table (VERDICT r11
-    item 4): micro-batches of (doc_id, text) stage exactly-once, then
-    apply as one ``append_to_winnow_table`` delta.  Per-doc winnow
+    """Streaming ingest for the WINNOW fingerprint table: micro-batches
+    of (doc_id, text) stage exactly-once, then apply as one
+    ``WINNOW_FPS.append`` delta.  Per-doc winnow
     fingerprints are epoch-independent by construction (text.py), so
     the incrementally-fed table's overlap pairs equal a from-scratch
     build's exactly — pinned with a crash-at-batch-1 drill in
     tests/test_streaming.py."""
-    from simplex_mapreduce_spark.operators.text import (
-        append_to_winnow_table,
-    )
+    from simplex_mapreduce_spark.operators.text import WINNOW_FPS
 
     return _staged_stream_apply(
         spark,
         stream_df,
         work_dir,
-        lambda delta: append_to_winnow_table(spark, delta, table),
+        lambda delta: WINNOW_FPS.append(spark, delta, table),
         crash_at_batch,
     )
 
@@ -259,22 +255,20 @@ def stream_ingest_to_ivf_index(
     work_dir: str,
     crash_at_batch: int | None = None,
 ) -> int:
-    """Streaming ingest for the IVF ANN index (VERDICT r11 item 4):
-    micro-batches of (vec_id, e) vectors stage exactly-once, then
-    apply as one ``append_to_ivf_index`` delta — assigned against the
+    """Streaming ingest for the IVF ANN index: micro-batches of
+    (vec_id, e) vectors stage exactly-once, then apply as one
+    ``IVF_INDEX.append`` delta — assigned against the
     ORIGINAL centroids read back from the stored index, so
     stream-then-query is identical to rebuild-then-query (the batch
     append's pinned property, extended with a crash-at-batch-1 drill
     in tests/test_streaming.py)."""
-    from simplex_mapreduce_spark.operators.similarity import (
-        append_to_ivf_index,
-    )
+    from simplex_mapreduce_spark.operators.similarity import IVF_INDEX
 
     return _staged_stream_apply(
         spark,
         stream_df,
         work_dir,
-        lambda delta: append_to_ivf_index(spark, delta, table),
+        lambda delta: IVF_INDEX.append(spark, delta, table),
         crash_at_batch,
     )
 

@@ -244,13 +244,6 @@ def test_ppjoin_prunes_hot_shingle_candidates(spark):
     assert n_candidates == 0
 
 
-def test_clear_shingle_cache_unpersists():
-    from simplex_mapreduce_spark.operators import dedup
-
-    dedup.clear_shingle_cache()
-    assert dedup._SETS_CACHE == {}
-
-
 def test_minhash_signature_stability(spark):
     """Same text -> identical signatures regardless of doc order."""
     from simplex_mapreduce_spark.operators.dedup import minhash_signatures
@@ -536,80 +529,49 @@ def test_contamination_check_finds_planted_leak(spark):
 
 def test_jaccard_from_stored_shingle_table_matches_cached(spark):
     """The stored-shingle-stage path (build once at ingest, query from
-    the bucketed table) must produce exactly the cached-pipeline pair
-    set at the driver threshold."""
+    the bucketed table) must produce exactly the in-session pipeline's
+    pair set at the driver threshold."""
     from simplex_mapreduce_spark.operators.dedup import (
-        _cached_sets,
-        build_shingle_table,
+        SHINGLES,
         jaccard_pairs_from_table,
     )
     from tests.conftest import SF_DIR
 
-    table = build_shingle_table(spark, SF_DIR)
+    docs = SHINGLES.load(spark, SF_DIR)
+    table = SHINGLES.build(spark, docs, SHINGLES.name(SF_DIR))
     try:
         stored = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
             for r in jaccard_pairs_from_table(spark, table).collect()
         }
+        sets = shingle_sets(docs)
         cached = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(_cached_sets(spark, SF_DIR)).collect()
+            for r in ngram_jaccard_pairs(sets).collect()
         }
+        sets.unpersist()
         assert stored == cached
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_shingle_cache_auto_evicts_on_session_stop():
-    """Cache entries owned by a STOPPED session are swept on the next
-    cache access (VERDICT r5): no manual clear_shingle_cache() needed.
-    Runs in a subprocess so stopping a SparkSession cannot disturb the
-    shared session fixture."""
-    import subprocess
-    import sys
-
-    code = """
-import simplex_mapreduce_spark.operators.dedup as dd
-from simplex_mapreduce_spark.session import get_spark
-
-s1 = get_spark("evict-1", cpus="2")
-dd._cached_base(s1, "/root/testdata/sf0.001")
-assert len(dd._SETS_CACHE) == 1 and len(dd._AUX_PERSISTED) == 1
-s1.stop()
-s2 = get_spark("evict-2", cpus="2")
-dd._sweep_dead_cache_entries()
-assert dd._SETS_CACHE == {} and dd._AUX_PERSISTED == []
-# and a fresh access rebuilds for the live session only
-dd._cached_base(s2, "/root/testdata/sf0.001")
-assert {k[0] for k in dd._SETS_CACHE} == {s2.sparkContext.applicationId}
-s2.stop()
-print("EVICT-OK")
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
-    )
-    assert "EVICT-OK" in out.stdout, out.stderr[-2000:]
-
-
 def test_stored_minhash_signatures_match_computed(spark):
-    """build_shingle_table materializes mh_0..mh_{k-1} at ingest
-    (round-6); reading them back must equal recomputing the md5
+    """The shingle table build materializes mh_0..mh_{k-1} at ingest;
+    reading them back must equal recomputing the md5
     min-hashes from the stored shingle arrays — and the stored-table
     LSH path must therefore reproduce the computed-path candidates."""
     from simplex_mapreduce_spark.operators.dedup import (
         MINHASH_K,
-        build_shingle_table,
+        SHINGLES,
         minhash_candidate_pairs,
         minhash_cols,
     )
     from simplex_mapreduce_spark.sources.bucketing import read_bucketed
     from tests.conftest import SF_DIR
 
-    table = build_shingle_table(spark, SF_DIR)
+    table = SHINGLES.build(
+        spark, SHINGLES.load(spark, SF_DIR), SHINGLES.name(SF_DIR)
+    )
     try:
         stored = read_bucketed(spark, table)
         assert all(f"mh_{i}" in stored.columns for i in range(MINHASH_K))
@@ -699,7 +661,7 @@ def test_stored_shingle_table_rebuilds_on_corpus_change(spark, tmp_path):
     import shutil
 
     from simplex_mapreduce_spark.operators.dedup import (
-        _shingle_table_name,
+        SHINGLES,
         stored_shingle_sets,
     )
 
@@ -722,7 +684,7 @@ def test_stored_shingle_table_rebuilds_on_corpus_change(spark, tmp_path):
         docs2.write.parquet(str(d / "documents.parquet"))
         assert stored_shingle_sets(spark, str(d)).count() == 5  # rebuilt
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {_shingle_table_name(str(d))}")
+        spark.sql(f"DROP TABLE IF EXISTS {SHINGLES.name(str(d))}")
 
 
 def test_keep_best_picks_highest_quality(spark):
@@ -789,8 +751,7 @@ def test_incremental_shingle_append_matches_full_build(spark, tmp_path):
     import random
 
     from simplex_mapreduce_spark.operators.dedup import (
-        append_to_shingle_table,
-        build_shingle_table,
+        SHINGLES,
         jaccard_pairs_from_table,
         minhash_candidate_pairs,
     )
@@ -820,10 +781,14 @@ def test_incremental_shingle_append_matches_full_build(spark, tmp_path):
 
     full_dir = write_docs(docs, "full")
     inc_dir = write_docs(half1, "inc")
-    t_full = build_shingle_table(spark, full_dir, table="shingle_drill_full")
-    t_inc = build_shingle_table(spark, inc_dir, table="shingle_drill_inc")
+    t_full = SHINGLES.build(
+        spark, SHINGLES.load(spark, full_dir), "shingle_drill_full"
+    )
+    t_inc = SHINGLES.build(
+        spark, SHINGLES.load(spark, inc_dir), "shingle_drill_inc"
+    )
     try:
-        append_to_shingle_table(
+        SHINGLES.append(
             spark,
             spark.createDataFrame(half2, "doc_id long, text string"),
             t_inc,
@@ -876,7 +841,7 @@ def _maint_corpus():
 
 
 def test_bucket_id_expression_matches_physical_layout(spark, tmp_path):
-    """compact_shingle_table_removals maps tombstoned ids to bucket
+    """Compaction maps tombstoned ids to bucket
     FILES via pmod(hash(doc_id), n) — this pin proves that expression
     equals Spark's physical bucketBy placement (every row of every
     bucket file hashes to the file's name-embedded bucket id), so the
@@ -884,7 +849,7 @@ def test_bucket_id_expression_matches_physical_layout(spark, tmp_path):
     import re
 
     from simplex_mapreduce_spark.operators.dedup import (
-        SHINGLE_TABLE_BUCKETS,
+        SHINGLES,
         build_shingle_table_from_docs,
     )
 
@@ -907,7 +872,7 @@ def test_bucket_id_expression_matches_physical_layout(spark, tmp_path):
                 spark.read.parquet(f"{loc}/{t}/{fn}")
                 .select(
                     F.pmod(
-                        F.hash("doc_id"), F.lit(SHINGLE_TABLE_BUCKETS)
+                        F.hash("doc_id"), F.lit(SHINGLES.n_buckets)
                     ).alias("b")
                 )
                 .distinct()
@@ -1028,8 +993,7 @@ def test_winnow_maintenance_matches_rebuild(spark):
     maintained table's ROWS must equal the rebuilt table's rows
     exactly."""
     from simplex_mapreduce_spark.operators.text import (
-        apply_corpus_diff_to_winnow_table,
-        build_winnow_table_from_docs,
+        WINNOW_FPS,
         winnow_pairs_from_table,
     )
     from simplex_mapreduce_spark.operators.versioning import corpus_diff
@@ -1051,14 +1015,14 @@ def test_winnow_maintenance_matches_rebuild(spark):
     t_rebuild = "winnow_maint_rebuild"
     for t in (t_maint, t_rebuild):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    build_winnow_table_from_docs(spark, old_df, t_maint)
-    build_winnow_table_from_docs(spark, new_df, t_rebuild)
+    WINNOW_FPS.build(spark, old_df, t_maint)
+    WINNOW_FPS.build(spark, new_df, t_rebuild)
     try:
-        stats = apply_corpus_diff_to_winnow_table(
+        stats = WINNOW_FPS.apply_diff(
             spark, corpus_diff(old_df, new_df), new_df, t_maint
         )
         assert stats["rows_removed"] == 4  # 3 removed + 1 changed
-        assert stats["docs_appended"] == 3  # 1 changed + 2 added
+        assert stats["rows_appended"] == 3  # 1 changed + 2 added
         rows = lambda t: sorted(  # noqa: E731
             (r["doc_id"], r["dg"], tuple(r["fps"]), r["n_fp"])
             for r in read_bucketed(spark, t).collect()
@@ -1090,18 +1054,12 @@ def test_ivf_maintenance_matches_rebuild(spark):
 
     from simplex_mapreduce_spark.operators.similarity import (
         IVF_CELLS,
-        _centroid_cells,
+        IVF_INDEX,
         _maintained_vectors,
-        _nearest_cell_expr,
         _vector_diff,
-        apply_vector_diff_to_ivf_index,
-        compact_ivf_index_removals,
         ivf_topk_from_table,
     )
-    from simplex_mapreduce_spark.sources.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
+    from simplex_mapreduce_spark.sources.bucketing import read_bucketed
 
     dim = 8
     vecs = [
@@ -1111,28 +1069,18 @@ def test_ivf_maintenance_matches_rebuild(spark):
     old = spark.createDataFrame(vecs, "vec_id long, e array<double>")
     new = _maintained_vectors(old)
 
-    def build(v, table):
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        assigned = v.crossJoin(F.broadcast(_centroid_cells(v))).select(
-            "vec_id", "e", _nearest_cell_expr().alias("cell_id")
-        )
-        write_bucketed(
-            assigned, table, "cell_id", n_buckets=IVF_CELLS,
-            sort_key="vec_id",
-        )
-
     t_maint, t_rebuild = "ivf_maint_drill", "ivf_maint_rebuild"
-    build(old, t_maint)
-    build(new, t_rebuild)
+    IVF_INDEX.build(spark, old, t_maint)
+    IVF_INDEX.build(spark, new, t_rebuild)
     try:
-        stats = apply_vector_diff_to_ivf_index(
-            spark, _vector_diff(old, new), old, new, t_maint
+        stats = IVF_INDEX.apply_diff(
+            spark, _vector_diff(old, new), new, t_maint, old=old
         )
         n_rm = len([i for i in range(IVF_CELLS, 120) if i % 13 == 5])
         n_ch = len([i for i in range(IVF_CELLS, 120) if i % 13 == 7])
         n_ad = len([i for i in range(IVF_CELLS, 120) if i % 13 == 9])
         assert stats["rows_removed"] == n_rm + n_ch
-        assert stats["vectors_appended"] == n_ch + n_ad
+        assert stats["rows_appended"] == n_ch + n_ad
         rows = lambda t: sorted(  # noqa: E731
             (r["vec_id"], r["cell_id"], tuple(r["e"]))
             for r in read_bucketed(spark, t).collect()
@@ -1144,7 +1092,7 @@ def test_ivf_maintenance_matches_rebuild(spark):
         assert topk(t_maint) == topk(t_rebuild)
         # tombstoning a centroid-source vector is refused, not absorbed
         with pytest.raises(ValueError, match="centroid"):
-            compact_ivf_index_removals(
+            IVF_INDEX.compact(
                 spark, old.filter(F.col("vec_id") == 3), t_maint
             )
     finally:
@@ -1289,10 +1237,10 @@ def test_split_leakage_reports_planted_cross_split_mirror(spark):
 
 
 def test_group_sidecars_lifecycle(spark, tmp_path):
-    """Round-10 mirror-group sidecars: written at build, byte-equal to
+    """Mirror-group sidecars: written at build, byte-equal to
     the inline recompute, DROPPED by both mutation paths (append /
     compaction) so a stale sidecar can never serve wrong groups, and
-    restorable via refresh_group_sidecars with unchanged output."""
+    restorable via refresh_sidecars with unchanged output."""
     import random
 
     from simplex_mapreduce_spark.operators import dedup as D
@@ -1308,7 +1256,9 @@ def test_group_sidecars_lifecycle(spark, tmp_path):
     spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
         f"{ddir}/documents.parquet"
     )
-    t = D.build_shingle_table(spark, ddir, table="shingle_sidecar_drill")
+    t = D.SHINGLES.build(
+        spark, D.SHINGLES.load(spark, ddir), "shingle_sidecar_drill"
+    )
     try:
         for kind in ("dg", "sg"):
             assert D._stored_groups(spark, t, kind, D.MIRROR_GROUP_CAP) is not None
@@ -1338,7 +1288,7 @@ def test_group_sidecars_lifecycle(spark, tmp_path):
         assert (200, 201) in with_sidecar_p  # the planted mirror pair
 
         # append invalidates ...
-        D.append_to_shingle_table(
+        D.SHINGLES.append(
             spark,
             spark.createDataFrame(
                 [(300, docs[2][1])], "doc_id long, text string"
@@ -1351,13 +1301,13 @@ def test_group_sidecars_lifecycle(spark, tmp_path):
         assert (201, 300) in post_append and post_append[(201, 300)] == 1.0
 
         # refresh restores the fast path with identical output
-        D.refresh_group_sidecars(spark, t)
+        D.SHINGLES.refresh_sidecars(spark, t)
         assert D._stored_groups(spark, t, "dg", D.MIRROR_GROUP_CAP) is not None
         assert pairs() == post_append
 
         # compaction invalidates too
         gone = spark.createDataFrame([(300,)], "doc_id long")
-        D.compact_shingle_table_removals(spark, gone, t)
+        D.SHINGLES.compact(spark, gone, t)
         assert D._stored_groups(spark, t, "dg", D.MIRROR_GROUP_CAP) is None
         assert pairs() == with_sidecar_p  # back to the pre-append set
     finally:
@@ -1365,19 +1315,22 @@ def test_group_sidecars_lifecycle(spark, tmp_path):
 
 
 def test_group_sidecar_crash_drill_stale_rejected(spark, tmp_path):
-    """Round-11 crash drill (VERDICT r10 item 2): simulate the OLD
-    failure mode — the table mutation commits but the sidecar drop
-    never runs (a kill between the two) — by no-opping
-    _drop_group_sidecars around an append.  The leftover sidecar is
+    """Crash drill: simulate the failure mode — the table mutation
+    commits but the sidecar drop never runs (a kill between the two) —
+    by no-opping drop_sidecars around an append.  The leftover sidecar is
     PRE-mutation state; the epoch stamp must reject it and the pair
     query must return the correct POST-append pair set via the inline
-    fallback.  Also drills the orphan case (round-10 advisory): an
-    out-of-band same-named rebuild must invalidate surviving sidecars."""
+    fallback.  Also drills the orphan case: an out-of-band same-named
+    rebuild must invalidate surviving sidecars."""
     import random
     from unittest import mock
 
     from simplex_mapreduce_spark.operators import dedup as D
-    from simplex_mapreduce_spark.sources.bucketing import write_bucketed
+    from simplex_mapreduce_spark.sources import bucketing
+    from simplex_mapreduce_spark.sources.bucketing import (
+        sidecar_path,
+        write_bucketed,
+    )
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(40)]
@@ -1390,14 +1343,16 @@ def test_group_sidecar_crash_drill_stale_rejected(spark, tmp_path):
     spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
         f"{ddir}/documents.parquet"
     )
-    t = D.build_shingle_table(spark, ddir, table="shingle_crash_drill")
+    t = D.SHINGLES.build(
+        spark, D.SHINGLES.load(spark, ddir), "shingle_crash_drill"
+    )
     try:
         assert D._stored_groups(spark, t, "dg", D.MIRROR_GROUP_CAP) is not None
 
         # planted crash: the drop call is swallowed, the sidecar files
         # survive the append on disk
-        with mock.patch.object(D, "_drop_group_sidecars", lambda *a: None):
-            D.append_to_shingle_table(
+        with mock.patch.object(bucketing, "drop_sidecars", lambda *a: None):
+            D.SHINGLES.append(
                 spark,
                 spark.createDataFrame(
                     [(300, docs[2][1])], "doc_id long, text string"
@@ -1406,7 +1361,7 @@ def test_group_sidecar_crash_drill_stale_rejected(spark, tmp_path):
             )
         # the stale sidecar parquet still exists ...
         jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(D._groups_path(spark, t, "dg"))
+        p = jvm.org.apache.hadoop.fs.Path(sidecar_path(spark, t, "groups_dg"))
         fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
         assert fs.exists(p)
         # ... but the epoch stamp no longer validates
@@ -1429,7 +1384,7 @@ def test_group_sidecar_crash_drill_stale_rejected(spark, tmp_path):
         # OUT OF BAND (plain write_bucketed, no sidecar management) —
         # the surviving sidecar must stop validating because the
         # rebuild bumped the table epoch
-        D.refresh_group_sidecars(spark, t)
+        D.SHINGLES.refresh_sidecars(spark, t)
         assert D._stored_groups(spark, t, "dg", D.MIRROR_GROUP_CAP) is not None
         from simplex_mapreduce_spark.sources.bucketing import read_bucketed
 
@@ -1438,7 +1393,7 @@ def test_group_sidecar_crash_drill_stale_rejected(spark, tmp_path):
         )
         write_bucketed(
             rows, t, "doc_id",
-            n_buckets=D.SHINGLE_TABLE_BUCKETS, sort_key="doc_id",
+            n_buckets=D.SHINGLES.n_buckets, sort_key="doc_id",
         )
         assert D._stored_groups(spark, t, "dg", D.MIRROR_GROUP_CAP) is None
     finally:
@@ -1482,3 +1437,61 @@ def test_posting_list_candidates_equal_selfjoin(spark):
         )
         assert len(new) > 0
     sets.unpersist()
+
+
+def test_warehouse_hygiene_no_orphaned_entries(spark):
+    """Every stored artifact's lifecycle (build, append, compact,
+    refresh sidecars, overwrite, DROP TABLE) leaves no warehouse entry
+    for a table that does not exist: sidecars live inside their table
+    directory, so whatever removes a table removes them too."""
+    import math
+    import os
+
+    from simplex_mapreduce_spark.operators.dedup import SHINGLES
+    from simplex_mapreduce_spark.operators.similarity import IVF_INDEX
+    from simplex_mapreduce_spark.operators.text import BPE_RULES, WINNOW_FPS
+
+    corpus = _maint_corpus()
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+    extra = spark.createDataFrame(
+        [(500, corpus[2][1]), (501, "fresh words for the appended tail doc")],
+        "doc_id long, text string",
+    )
+
+    def vectors(ids, phase):
+        return spark.createDataFrame(
+            [(i, [math.sin(phase * i + 0.3 * j) for j in range(8)]) for i in ids],
+            "vec_id long, e array<double>",
+        )
+
+    vecs = vectors(range(40), 0.7)
+    cases = [
+        (SHINGLES, "hygiene_shingles", docs, extra, docs.filter("doc_id IN (1, 2)")),
+        (WINNOW_FPS, "hygiene_winnow", docs, extra, docs.filter("doc_id IN (1, 2)")),
+        (IVF_INDEX, "hygiene_ivf", vecs, vectors(range(100, 106), 0.5),
+         vecs.filter("vec_id IN (20, 21)")),
+        (BPE_RULES, "hygiene_bpe", docs, None, None),
+    ]
+    loc = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:").rstrip("/")
+
+    def orphans():
+        return {
+            e for e in os.listdir(loc)
+            if e.startswith("hygiene_") and not spark.catalog.tableExists(e)
+        }
+
+    stale = orphans()  # left by an earlier interrupted run, not by this one
+    try:
+        for spec, table, src, delta, gone in cases:
+            spec.build(spark, src, table)
+            if delta is not None:
+                spec.append(spark, delta, table)
+                spec.compact(spark, gone, table)
+            spec.refresh_sidecars(spark, table)
+            spec.build(spark, src, table)  # overwrite
+            assert orphans() - stale == set(), table
+            spark.sql(f"DROP TABLE {table}")
+            assert orphans() - stale == set(), table
+    finally:
+        for _, table, *_ in cases:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")

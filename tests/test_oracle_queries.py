@@ -31,9 +31,9 @@ def test_ann_ivf_persisted_matches_inline(spark):
     """The persisted-index ANN path (bucketed assignment table + static
     bucket pruning) must return exactly the inline single-pass plan's
     top-k — same vectors, same rounded similarities, same order."""
-    from simplex_mapreduce_spark.operators.similarity import _ivf_table_name
+    from simplex_mapreduce_spark.operators.similarity import IVF_INDEX
 
-    table = _ivf_table_name(SF_DIR)
+    table = IVF_INDEX.name(SF_DIR)
     try:
         inline = registry.QUERIES["ann_ivf_topk"](spark, SF_DIR).collect()
         persisted = registry.QUERIES["ann_ivf_topk_persisted"](spark, SF_DIR).collect()
@@ -61,10 +61,7 @@ def test_ivf_incremental_append_matches_full_rebuild(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from simplex_mapreduce_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-    )
+    from simplex_mapreduce_spark.operators.similarity import IVF_INDEX
 
     rng = random.Random(7)
     dim = 8
@@ -81,15 +78,15 @@ def test_ivf_incremental_append_matches_full_rebuild(spark, tmp_path):
 
     ta, tb = "ivf_inc_test_a", "ivf_inc_test_b"
     try:
-        build_ivf_index(spark, base_dir, table=ta)
-        append_to_ivf_index(
+        IVF_INDEX.build(spark, IVF_INDEX.load(spark, base_dir), ta)
+        IVF_INDEX.append(
             spark,
             spark.createDataFrame(delta, schema).select(
                 "vec_id", F.col("embedding").cast("array<double>").alias("e")
             ),
             ta,
         )
-        build_ivf_index(spark, full_dir, table=tb)
+        IVF_INDEX.build(spark, IVF_INDEX.load(spark, full_dir), tb)
         got = {
             r["vec_id"]: r["cell_id"] for r in spark.table(ta).collect()
         }

@@ -188,9 +188,9 @@ def test_ivf_persisted_probe_filter_pushed_to_index_scan(spark):
     scan — with the index written bucketed by cell_id, the pushed
     In(cell_id, ...) skips every non-probed file via footer stats, which
     is the nprobe/ncells IO bound the stored index exists to provide."""
-    from simplex_mapreduce_spark.operators.similarity import _ivf_table_name
+    from simplex_mapreduce_spark.operators.similarity import IVF_INDEX
 
-    table = _ivf_table_name(SF_DIR)
+    table = IVF_INDEX.name(SF_DIR)
     try:
         plan = _plan(spark, "ann_ivf_topk_persisted")
         pushed = " ".join(

@@ -232,8 +232,11 @@ def test_ingest_table_reattaches_across_sessions(tmp_path):
     not once per session: a second Spark application finding the
     warehouse data + matching fingerprint sidecar re-registers the
     bucketed table (CREATE TABLE ... LOCATION) without rewriting a
-    byte.  Run in subprocesses so each gets a genuinely fresh
-    session-scoped catalog, with cwd-isolated warehouses."""
+    byte.  A third session rebuilds the re-attached (external) table
+    under the same name, which must replace its files rather than fail
+    on the existing location.  Run in subprocesses so each gets a
+    genuinely fresh session-scoped catalog, with cwd-isolated
+    warehouses."""
     import json
     import os
     import subprocess
@@ -245,26 +248,28 @@ def test_ingest_table_reattaches_across_sessions(tmp_path):
         import glob, json, os, sys, time
         sys.path.insert(0, %r)
         from simplex_mapreduce_spark import get_spark
-        from simplex_mapreduce_spark.operators.dedup import (
-            ensure_dedup_ingest, _shingle_table_name)
+        from simplex_mapreduce_spark.operators.dedup import SHINGLES
+        sf = %r
         spark = get_spark("reattach-drill")
         spark.sparkContext.setLogLevel("ERROR")
         t0 = time.perf_counter()
-        ensure_dedup_ingest(spark, "/root/testdata/sf0.001")
+        table = SHINGLES.ensure(spark, sf)
         wall = time.perf_counter() - t0
+        if sys.argv[1:] == ["rebuild"]:
+            SHINGLES.build(spark, SHINGLES.load(spark, sf), table)
         files = sorted(
             (os.path.basename(f), os.path.getmtime(f))
-            for f in glob.glob("spark-warehouse/shingle_sets_sf0_001/*.parquet")
+            for f in glob.glob(f"spark-warehouse/{table}/*.parquet")
         )
-        n = spark.table(_shingle_table_name("/root/testdata/sf0.001")).count()
+        n = spark.table(table).count()
         print("RESULT" + json.dumps({"wall": wall, "files": files, "rows": n}))
         spark.stop()
         """
-    ) % os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ) % (os.path.dirname(os.path.dirname(os.path.abspath(__file__))), SF_DIR)
 
-    def run():
+    def run(*args):
         out = subprocess.run(
-            [sys.executable, "-c", script],
+            [sys.executable, "-c", script, *args],
             cwd=tmp_path,
             capture_output=True,
             text=True,
@@ -280,6 +285,9 @@ def test_ingest_table_reattaches_across_sessions(tmp_path):
     assert first["files"] == second["files"]
     # ... and the second session skipped the build entirely
     assert second["wall"] < first["wall"] / 2
+    rebuilt = run("rebuild")
+    assert rebuilt["rows"] == first["rows"]
+    assert rebuilt["files"] != first["files"]
 
 
 def test_unique_corpus_has_disjoint_token_spaces(spark, tmp_path):

@@ -679,7 +679,7 @@ def test_stream_ingest_feeds_shingle_table_exactly_once(spark, tmp_path):
     import random
 
     from simplex_mapreduce_spark.operators.dedup import (
-        build_shingle_table,
+        SHINGLES,
         jaccard_pairs_from_table,
     )
     from simplex_mapreduce_spark.sources.bucketing import read_bucketed
@@ -717,8 +717,12 @@ def test_stream_ingest_feeds_shingle_table_exactly_once(spark, tmp_path):
         delta, "doc_id long, text string"
     ).repartition(4).write.parquet(delta_dir)
 
-    t_inc = build_shingle_table(spark, base_dir, table="stream_ingest_inc")
-    t_full = build_shingle_table(spark, full_dir, table="stream_ingest_full")
+    t_inc = SHINGLES.build(
+        spark, SHINGLES.load(spark, base_dir), "stream_ingest_inc"
+    )
+    t_full = SHINGLES.build(
+        spark, SHINGLES.load(spark, full_dir), "stream_ingest_full"
+    )
     work = str(tmp_path / "work")
     try:
         schema = spark.read.parquet(delta_dir).schema
@@ -854,7 +858,7 @@ def test_stream_ingest_feeds_winnow_table_exactly_once(spark, tmp_path):
     import random
 
     from simplex_mapreduce_spark.operators.text import (
-        build_winnow_table_from_docs,
+        WINNOW_FPS,
         winnow_pairs_from_table,
     )
     from simplex_mapreduce_spark.sources.bucketing import read_bucketed
@@ -875,8 +879,8 @@ def test_stream_ingest_feeds_winnow_table_exactly_once(spark, tmp_path):
 
     bdf = spark.createDataFrame(base, "doc_id long, text string")
     fdf = spark.createDataFrame(base + delta, "doc_id long, text string")
-    t_inc = build_winnow_table_from_docs(spark, bdf, "stream_winnow_inc")
-    t_full = build_winnow_table_from_docs(spark, fdf, "stream_winnow_full")
+    t_inc = WINNOW_FPS.build(spark, bdf, "stream_winnow_inc")
+    t_full = WINNOW_FPS.build(spark, fdf, "stream_winnow_full")
     delta_dir = str(tmp_path / "delta_in")
     spark.createDataFrame(
         delta, "doc_id long, text string"
@@ -933,7 +937,7 @@ def test_stream_ingest_feeds_ivf_index_exactly_once(spark, tmp_path):
     import random
 
     from simplex_mapreduce_spark.operators.similarity import (
-        build_ivf_index,
+        IVF_INDEX,
         ivf_topk_from_table,
     )
     from simplex_mapreduce_spark.sources.bucketing import read_bucketed
@@ -956,8 +960,12 @@ def test_stream_ingest_feeds_ivf_index_exactly_once(spark, tmp_path):
     spark.createDataFrame(
         base + delta, "vec_id long, embedding array<double>"
     ).write.parquet(f"{full_dir}/embeddings.parquet")
-    t_inc = build_ivf_index(spark, base_dir, table="stream_ivf_inc")
-    t_full = build_ivf_index(spark, full_dir, table="stream_ivf_full")
+    t_inc = IVF_INDEX.build(
+        spark, IVF_INDEX.load(spark, base_dir), "stream_ivf_inc"
+    )
+    t_full = IVF_INDEX.build(
+        spark, IVF_INDEX.load(spark, full_dir), "stream_ivf_full"
+    )
     delta_dir = str(tmp_path / "delta_in")
     spark.createDataFrame(
         [(i, e) for i, e in delta], "vec_id long, e array<double>"

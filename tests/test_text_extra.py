@@ -473,15 +473,10 @@ def test_winnow_epoch_append_equals_full_rebuild(spark):
     from pyspark.sql import functions as F
 
     from simplex_mapreduce_spark.operators.text import (
-        WINNOW_TABLE_BUCKETS,
-        append_to_winnow_table,
-        winnow_ingest_rows,
+        WINNOW_FPS,
         winnow_pairs_from_table,
     )
-    from simplex_mapreduce_spark.sources.bucketing import (
-        read_table_marker,
-        write_bucketed,
-    )
+    from simplex_mapreduce_spark.sources.bucketing import read_table_marker
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
@@ -495,11 +490,8 @@ def test_winnow_epoch_append_equals_full_rebuild(spark):
     e2 = docs.filter(F.col("doc_id") > mid).unionByName(src)
     table = "winnow_epoch_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_bucketed(
-        winnow_ingest_rows(e1), table, "doc_id",
-        n_buckets=WINNOW_TABLE_BUCKETS, sort_key="doc_id",
-    )
-    append_to_winnow_table(spark, e2, table)
+    WINNOW_FPS.build(spark, e1, table)
+    WINNOW_FPS.append(spark, e2, table)
     incremental = winnow_pairs_from_table(spark, table).toPandas()
     # the inline query over the ORIGINAL dir lacks the planted mirror;
     # rebuild the union frame through the same inline pipeline instead
@@ -1178,13 +1170,13 @@ def test_bpe_encode_stored_equals_inline_and_rules_match_train(spark):
     """The stored-artifact encode path reproduces the inline path
     exactly, and the persisted rule table IS bpe_train's output."""
     from simplex_mapreduce_spark.operators.text import (
+        BPE_RULES,
         bpe_encode,
         bpe_encode_stored,
         bpe_train,
-        ensure_bpe_rules,
     )
 
-    table = ensure_bpe_rules(spark, SF_DIR)
+    table = BPE_RULES.ensure(spark, SF_DIR)
     try:
         stored_rules = sorted(
             map(tuple, spark.table(table).collect()),
@@ -1505,8 +1497,8 @@ def test_dup_ngram_coverage_fires_on_planted_repetition(spark):
 
 
 def test_winnow_group_sidecar_lifecycle(spark, tmp_path):
-    """The winnow table's mirror-group sidecar (round 10, mirroring the
-    shingle table's): written by both builders, read by the stored
+    """The winnow table's mirror-group sidecar (mirroring the shingle
+    table's): written by the build, read by the stored
     query path with output identical to the inline-group fallback, and
     dropped by append so stale groups can never be served."""
     from pyspark.sql import functions as F
@@ -1516,9 +1508,7 @@ def test_winnow_group_sidecar_lifecycle(spark, tmp_path):
         _stored_groups,
     )
     from simplex_mapreduce_spark.operators.text import (
-        _write_winnow_group_sidecar,
-        append_to_winnow_table,
-        build_winnow_table_from_docs,
+        WINNOW_FPS,
         winnow_pairs_from_table,
     )
 
@@ -1527,7 +1517,7 @@ def test_winnow_group_sidecar_lifecycle(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     table = "winnow_sidecar_drill"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    build_winnow_table_from_docs(spark, docs, table)
+    WINNOW_FPS.build(spark, docs, table)
     try:
         assert _stored_groups(spark, table, "dg", MIRROR_GROUP_CAP) is not None
         key = lambda df: {  # noqa: E731
@@ -1538,7 +1528,7 @@ def test_winnow_group_sidecar_lifecycle(spark, tmp_path):
         assert (1, 2) in {(a, b) for a, b, _ in with_sidecar}  # mirror pair
 
         # append drops the sidecar; the fallback sees the new mirror
-        append_to_winnow_table(
+        WINNOW_FPS.append(
             spark,
             spark.createDataFrame([(9, base)], "doc_id long, text string"),
             table,
@@ -1548,7 +1538,7 @@ def test_winnow_group_sidecar_lifecycle(spark, tmp_path):
         assert (2, 9) in {(a, b) for a, b, _ in post}
 
         # rebuilding the sidecar restores the fast path, same output
-        _write_winnow_group_sidecar(spark, table)
+        WINNOW_FPS.refresh_sidecars(spark, table)
         assert _stored_groups(spark, table, "dg", MIRROR_GROUP_CAP) is not None
         assert key(winnow_pairs_from_table(spark, table)) == post
     finally:
